@@ -50,7 +50,7 @@ object ProfileKey {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let listener events drain (no public waitUntilEmpty)
+      org.apache.spark.graft.GraftBus.waitUntilEmpty(spark.sparkContext)
       println(f"=== run $i: $key wall=$wall%.3f s jobs=${lines.size} stages=${stageCounts.get} tasks=${taskCounts.get}")
       lines.forEach(l => println("  " + l))
     }

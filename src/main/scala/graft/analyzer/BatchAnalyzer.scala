@@ -29,6 +29,10 @@ import graft.ops.{Classify, Spans}
   *
   * Scale: every step is a key-partitioned aggregation on
   * (queryId, batchId[, group]); nothing is global, nothing collects.
+  *
+  * This is the offline path, for [[graft.ingest.Replay]]-loaded telemetry
+  * that need not fit on the driver, and the reference the live path's
+  * driver-side fold ([[LiveAnalyzer]]) is tested against.
   */
 object BatchAnalyzer {
 

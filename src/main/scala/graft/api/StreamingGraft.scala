@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.analyzer.{BatchAnalyzer, SpanBuilder}
+import graft.analyzer.LiveAnalyzer
 import graft.config.GraftConfig
 import graft.ingest.ListenerBridge
-import graft.model.{AggregateStateResult, CriticalPathResult, QuerySla}
+import graft.model.{AggregateStateResult, CriticalPathResult}
 import graft.report.{EventsReporter, Reporting}
 
 /** Public API facade — constructor/lifecycle parity with the reference's
@@ -17,7 +17,7 @@ import graft.report.{EventsReporter, Reporting}
   * caller-driven cadence), report, detach.
   *
   * Where the reference hand-schedules per-query threads, analysis here is
-  * one Dataset plan over drained telemetry — [[analyzeNow]] can run on any
+  * one driver-side fold over the retained telemetry — [[analyzeNow]] can run on any
   * cadence (the reference's 5-minute default belongs to the caller's
   * trigger, ref `QueryInsightsManager.scala:194-196`).
   */
@@ -62,31 +62,31 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     slaOverrides.put(queryIdent, slaMillis)
   }
 
-  /** Run the critical-path analysis over the retained telemetry. Pure
-    * Dataset plan; returns the per-batch results. Retention is applied
-    * after each analysis (ref `QueryInsightsManager.scala:234-244`). */
+  /** Run the critical-path analysis over the retained telemetry and return
+    * the per-batch results. The live window is folded on the driver
+    * ([[graft.analyzer.LiveAnalyzer]], the same results as the Dataset
+    * pipeline) and launches no Spark job. Retention is applied after each
+    * analysis (ref `QueryInsightsManager.scala:234-244`). */
   def analyzeNow(): Dataset[CriticalPathResult] = {
     import spark.implicits._
-    val sched = schedulerBridge.snapshot(spark)
-    val prog = progressBridge.snapshot(spark)
-    val slas = slaOverrides.asScala.toSeq.map { case (q, s) => QuerySla(q, s) }.toDS()
-    val results = BatchAnalyzer.analyze(
-      SpanBuilder.jobSpans(sched),
-      SpanBuilder.stageSpans(sched),
-      SpanBuilder.batchProgress(prog),
-      slas,
+    val t0 = System.nanoTime()
+    // Progress first: a batch's jobs end before its progress is posted, and
+    // copying the scheduler buffer second never pairs a visible progress
+    // row with scheduler events copied before that row arrived (the reverse
+    // order classifies such a batch without its jobs).
+    val prog = progressBridge.retained
+    val sched = schedulerBridge.retained
+    val collected = LiveAnalyzer.analyze(sched, prog, slaOverrides.asScala.toMap,
       defaultSlaMillis = config.expectedMicroBatchSLAMillis,
       lowFrac = config.criticalPathLowerThreshold,
       highFrac = config.criticalPathUpperThreshold)
-    val t0 = System.nanoTime()
-    val collected = results.collect()
-    buffer(collected.toIndexedSeq)
+    buffer(collected)
     metrics.update(
       collected.sortBy(r => (r.queryId, r.batchId)).lastOption,
       (System.nanoTime() - t0) / 1000000L)
     if (config.shouldLogResults) collected.foreach(r => println(Reporting.logBlock(r)))
     reporter.foreach { rep =>
-      Reporting.renderJson(spark.createDataset(collected.toIndexedSeq), "graft", "run",
+      Reporting.renderJson(spark.createDataset(collected), "graft", "run",
         org.apache.spark.sql.functions.lit(System.currentTimeMillis()))
         .collect().foreach(row => rep.sendEvent(row.getString(0)))
     }
@@ -96,7 +96,7 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     // to its cap and silently drops every new event.
     schedulerBridge.evictBefore(System.currentTimeMillis() -
       config.maxBatchesRetention.toLong * config.analysisIntervalMinutes * 60000L)
-    spark.createDataset(collected.toIndexedSeq)
+    spark.createDataset(collected)
   }
 
   /** Bounded history of analysis results, newest-last — the reference caps
@@ -257,7 +257,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
         // abandoned thread submits under the group afterwards.
         if (e.isInstanceOf[java.util.concurrent.TimeoutException])
           spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-        System.err.println(s"[graft] analysis failed: ${e.getMessage}")
+        System.err.println(s"[graft] analysis failed: $e")
+        e.printStackTrace()
         if (consecutiveFailures.incrementAndGet() >= config.maxRetries) stop()
         spark.createDataset(Seq(CriticalPathResult(
           "analysis", -1L, config.expectedMicroBatchSLAMillis, 0L, 0L,

@@ -16,8 +16,10 @@ import graft.model.{ProgressEvent, SchedulerEvent}
   *
   * Unlike the reference — which mutates shared concurrent maps on the
   * listener-bus thread and analyzes clones of them — the bridges only
-  * append immutable rows to a bounded drain queue; ALL analytics run as
-  * Dataset plans over the drained rows ([[graft.analyzer.SpanBuilder]]).
+  * append immutable rows to a bounded drain queue. The live facade folds a
+  * copy of the rows on the driver ([[graft.analyzer.LiveAnalyzer]], from
+  * `retained`); `snapshot` serves the same rows as a Dataset to the
+  * Dataset pipeline ([[graft.analyzer.SpanBuilder]]).
   * The listener-bus thread does O(1) work per event, which is what keeps a
   * busy 1000-executor app from dropping bus events.
   */
@@ -43,12 +45,15 @@ object ListenerBridge {
 
     def droppedCount: Long = dropped.get
 
-    /** Snapshot buffered events into a Dataset without consuming them —
+    /** Copy of the buffered events, oldest first, without consuming them —
       * telemetry stays available to later analyses, like the reference's
       * retained tracker maps (`StreamingAppTracker.scala:33-42`). */
+    def retained: Seq[SchedulerEvent] = queue.asScala.toIndexedSeq
+
+    /** [[retained]] as a Dataset. */
     def snapshot(spark: SparkSession): Dataset[SchedulerEvent] = {
       import spark.implicits._
-      spark.createDataset(queue.asScala.toSeq)
+      spark.createDataset(retained)
     }
 
     /** Retention eviction: drop events older than `horizonMs`
@@ -112,41 +117,48 @@ object ListenerBridge {
 
     def droppedCount: Long = dropped.get
 
-    /** Snapshot buffered events without consuming them. */
+    /** Copy of the buffered events, oldest first, without consuming them. */
+    def retained: Seq[ProgressEvent] = queue.asScala.toIndexedSeq
+
+    /** [[retained]] as a Dataset. */
     def snapshot(spark: SparkSession): Dataset[ProgressEvent] = {
       import spark.implicits._
-      spark.createDataset(queue.asScala.toSeq)
+      spark.createDataset(retained)
     }
 
     /** Retention eviction (ref `QueryInsightsManager.scala:234-240`): keep
       * only the newest `maxBatches` batch ids per query, and drop the
       * batchId-less started/terminated lifecycle rows of runs that have
-      * terminated AND have no retained batches left — otherwise restarts
-      * accumulate lifecycle rows until the buffer cap silently drops
-      * everything new. */
-    def evictBeyond(maxBatches: Int): Unit = {
-      val snapshotSeq = queue.asScala.toSeq
-      // .toSeq before flatMap: flatMapping a Map into tuples would rebuild a
-      // Map and collapse all batches of a query onto the last one.
-      val keep = snapshotSeq
-        .filter(_.batchId.isDefined)
-        .groupBy(_.queryId)
-        .toSeq
-        .flatMap { case (q, es) =>
-          es.flatMap(_.batchId).distinct.sorted.takeRight(maxBatches)
-            .map(b => (q, b))
-        }.toSet
-      val retainedQueries = keep.map(_._1)
-      val terminatedQueries = snapshotSeq.filter(_.kind == "terminated").map(_.queryId).toSet
+      * terminated AND whose query has no retained batches left — otherwise
+      * restarts accumulate lifecycle rows until the buffer cap silently
+      * drops everything new. */
+    def evictBeyond(maxBatches: Int): Unit = evictBeyond(maxBatches, retained)
+
+    /** Eviction decided on `seen`, a copy taken earlier, while the listener
+      * keeps appending: rows are removed only by per-query cutoff batch ids
+      * and terminated runs found in `seen`. A row that arrives after the
+      * copy survives unless its batch id is at or below its query's cutoff;
+      * rows of queries absent from `seen` always survive. */
+    private[ingest] def evictBeyond(maxBatches: Int, seen: Seq[ProgressEvent]): Unit = {
+      val batchesByQuery = seen.filter(_.batchId.isDefined).groupBy(_.queryId)
+      // cutoff(q): the newest batch id of q that falls out of the window
+      val cutoff = batchesByQuery.flatMap { case (q, es) =>
+        val ids = es.flatMap(_.batchId).distinct.sorted
+        if (ids.size > maxBatches) Some(q -> ids(ids.size - maxBatches - 1)) else None
+      }
+      val terminatedRuns = seen.filter(_.kind == "terminated")
+        .map(e => (e.queryId, e.queryRunId)).toSet
       queue.removeIf { e =>
-        (e.batchId.isDefined && !keep.contains((e.queryId, e.batchId.get))) ||
-        (e.batchId.isEmpty && terminatedQueries.contains(e.queryId) &&
-          !retainedQueries.contains(e.queryId))
+        e.batchId match {
+          case Some(b) => cutoff.get(e.queryId).exists(b <= _)
+          case None => terminatedRuns.contains((e.queryId, e.queryRunId)) &&
+            !batchesByQuery.contains(e.queryId)
+        }
       }
       queued.set(queue.size)
     }
 
-    private def offer(e: ProgressEvent): Unit =
+    private[ingest] def offer(e: ProgressEvent): Unit =
       if (queued.get < maxBuffered) { queue.add(e); queued.incrementAndGet() }
       else dropped.incrementAndGet()
 

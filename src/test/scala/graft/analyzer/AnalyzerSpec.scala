@@ -1,7 +1,11 @@
 package graft.analyzer
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.Random
+
 import graft.SparkSpec
 import graft.model._
+import graft.ops.Classify
 
 /** Golden tests for the reference-parity analysis pipeline, driven by the
   * FIXTURES.md §B scenarios. */
@@ -24,14 +28,21 @@ class AnalyzerSpec extends SparkSpec {
   private def progress(q: String, b: Long, rows: Long, rps: Double): BatchProgress =
     BatchProgress(q, b, "2024-01-01T00:00:00.000Z", rows, rps)
 
+  /** Dataset pipeline results by batch, after asserting that the live
+    * path's driver-side fold returns the same rows. */
   private def analyze(events: Seq[SchedulerEvent],
                       prog: Seq[BatchProgress],
                       slas: Seq[QuerySla]): Map[(String, Long), CriticalPathResult] = {
     import spark.implicits._
     val jobs = SpanBuilder.jobSpans(events.toDS())
     val stages = SpanBuilder.stageSpans(events.toDS())
-    BatchAnalyzer.analyze(jobs, stages, prog.toDS(), slas.toDS())
-      .collect().map(r => (r.queryId, r.batchId) -> r).toMap
+    val viaDataset = BatchAnalyzer.analyze(jobs, stages, prog.toDS(), slas.toDS()).collect()
+    val viaFold = LiveAnalyzer.analyze(events,
+      prog.map(p => ProgressEvent("progress", p.queryId, "run", None, Some(p.batchId),
+        Some(p.timestamp), Some(p.numInputRows), Some(p.processedRowsPerSecond), Nil, None)),
+      slas.map(s => s.queryIdent -> s.slaMillis).toMap)
+    assert(viaFold.sortBy(_.toString) === viaDataset.toSeq.sortBy(_.toString))
+    viaDataset.map(r => (r.queryId, r.batchId) -> r).toMap
   }
 
   test("readme-sample golden: brt 2094ms, ct 2047ms, SLA 10s => OVERPROVISIONED") {
@@ -197,5 +208,91 @@ class AnalyzerSpec extends SparkSpec {
       SpanBuilder.jobExecutors(events), "q", 1L)
       .collect().map(_.executorId).toSeq
     assert(got === Seq("ex1"))
+  }
+
+  /** Seeded random live window: two queries with an SLA override on one,
+    * sql-execution groups of nested and overlapping jobs, null execution
+    * ids, jobs without a queryId, in-flight jobs and stages, stages listed
+    * by two jobs, skipped and resubmitted stages, parents outside the job,
+    * progress with zero rows or a zero rate, and duplicate progress rows. */
+  private def randomWindow(rnd: Random): (Seq[SchedulerEvent], Seq[ProgressEvent]) = {
+    val events = ArrayBuffer.empty[SchedulerEvent]
+    val progress = ArrayBuffer.empty[ProgressEvent]
+    val earlier = ArrayBuffer.empty[Int]
+    var nextJob = 0L
+    var nextStage = 0
+    var nextExecution = 0L
+    def pct(n: Int) = rnd.nextInt(100) < n
+    def earlierStage = if (earlier.nonEmpty && pct(20)) Seq(earlier(rnd.nextInt(earlier.size))) else Nil
+    for (q <- Seq("q1", "q2"); b <- 0L until 6L) {
+      val base = b * 10000L
+      for (_ <- 0 until 1 + rnd.nextInt(3)) {
+        nextExecution += 1
+        val execution = if (pct(25)) None else Some(nextExecution)
+        for (_ <- 0 until 1 + rnd.nextInt(4)) {
+          nextJob += 1
+          // a 50 ms grid, so jobs also touch end-to-start (ties)
+          val start = base + 50L * rnd.nextInt(8)
+          val own = Seq.fill(1 + rnd.nextInt(3)) { nextStage += 1; nextStage }
+          val skipped = if (pct(20)) { nextStage += 1; Seq(nextStage) } else Nil
+          events += ev("jobStart", start, jobId = Some(nextJob),
+            stageIds = own ++ earlierStage ++ skipped, sqlExecutionId = execution,
+            queryId = if (pct(10)) None else Some(q), batchId = Some(b))
+          if (!pct(10)) events += ev("jobEnd", start + 50L * rnd.nextInt(12), jobId = Some(nextJob))
+          own.zipWithIndex.foreach { case (s, i) =>
+            val parents = (if (i > 0 && pct(70)) Seq(own(rnd.nextInt(i))) else Nil) ++ earlierStage
+            val at = start + rnd.nextInt(100)
+            // a resubmission keeps its parents, as in Spark; the Dataset
+            // path's first(parents) is order-dependent across partitions
+            (0 until (if (pct(15)) 2 else 1)).foreach(_ =>
+              events += ev("stageSubmitted", at, stageId = Some(s), parents = parents))
+            (0 until rnd.nextInt(4)).foreach(_ =>
+              events += ev("taskEnd", at + 50, stageId = Some(s),
+                durationMs = if (pct(5)) None else Some(rnd.nextInt(100).toLong)))
+            if (!pct(10)) events += ev("stageCompleted", at + 100, stageId = Some(s))
+          }
+          earlier ++= own
+        }
+      }
+      val rows = if (pct(10)) 0L else rnd.nextInt(3000).toLong
+      val rate = if (pct(10)) 0.0 else 500.0 + rnd.nextDouble() * 1000
+      val row = ProgressEvent("progress", q, "run", Some(q), Some(b),
+        Some("2024-01-01T00:00:00.000Z"), Some(rows), Some(rate), Seq("src"), Some("sink"))
+      progress += row
+      if (pct(15)) progress += row.copy(numInputRows = Some(rows + 1))
+    }
+    progress += ProgressEvent("started", "q1", "run", Some("q1"), None, None, None, None, Nil, None)
+    events += SchedulerEvent("executorAdded", 0, None, Nil, None, Nil, None, None,
+      Some("ex1"), Some("h1"), Some(4), None, None, None, None, None)
+    (rnd.shuffle(events.toSeq), progress.toSeq)
+  }
+
+  test("live fold equals the Dataset pipeline on seeded random telemetry") {
+    import spark.implicits._
+    val rnd = new Random(17)
+    val states = scala.collection.mutable.Set.empty[String]
+    for (_ <- 0 until 6) {
+      val (events, progress) = randomWindow(rnd)
+      val slas = Map("q1" -> (500L + rnd.nextInt(4000)))
+      val defaultSla = 500L + rnd.nextInt(4000)
+      val (low, high) = (0.2 + rnd.nextDouble() * 0.2, 0.6 + rnd.nextDouble() * 0.3)
+      val ds = events.toDS()
+      val jobs = SpanBuilder.jobSpans(ds)
+      val stages = SpanBuilder.stageSpans(ds)
+      assert(LiveAnalyzer.jobSpans(events).sortBy(_.jobId) ===
+        jobs.collect().toSeq.sortBy(_.jobId))
+      assert(LiveAnalyzer.stageSpans(events).sortBy(s => (s.jobId, s.stageId)) ===
+        stages.collect().toSeq.sortBy(s => (s.jobId, s.stageId)))
+      val viaDataset = BatchAnalyzer.analyze(jobs, stages,
+        SpanBuilder.batchProgress(progress.toDS()),
+        slas.toSeq.map { case (q, s) => QuerySla(q, s) }.toDS(),
+        defaultSlaMillis = defaultSla, lowFrac = low, highFrac = high).collect()
+      val viaFold = LiveAnalyzer.analyze(events, progress, slas,
+        defaultSlaMillis = defaultSla, lowFrac = low, highFrac = high)
+      assert(viaFold.sortBy(_.toString) === viaDataset.toSeq.sortBy(_.toString))
+      assert(viaFold.size === progress.count(_.kind == "progress"))
+      states ++= viaFold.map(_.streamingQueryState)
+    }
+    assert(states === (Classify.stateOrdinals.keySet - "ERROR"))
   }
 }

@@ -1,7 +1,10 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.config.GraftConfig
+import org.apache.spark.graft.GraftBus
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Reflection-loaded by the reporter SPI in the aggregate-report test. */
@@ -51,13 +54,9 @@ class StreamingGraftSpec extends SparkSpec {
         mem.addData(1001 to 2000: _*)
         query.processAllAvailable()
       } finally query.stop()
-      // listener bus is async; poll until the jobEnd events flush
-      var results = graft.analyzeNow().collect()
-      var tries = 0
-      while (results.isEmpty && tries < 20) {
-        Thread.sleep(500); tries += 1
-        results = graft.analyzeNow().collect()
-      }
+      // the stopped query posted all its events; deliver them to the bridges
+      GraftBus.waitUntilEmpty(spark.sparkContext)
+      val results = graft.analyzeNow().collect()
       assert(results.nonEmpty, "no batches analyzed - listeners captured nothing")
       assert(results.forall(_.queryId.nonEmpty))
       assert(results.forall(r =>
@@ -112,12 +111,8 @@ class StreamingGraftSpec extends SparkSpec {
         mem.addData(501 to 1000: _*)
         query.processAllAvailable()
       } finally query.stop()
-      var results = g.analyzeNow().collect()
-      var tries = 0
-      while (results.isEmpty && tries < 20) {
-        Thread.sleep(500); tries += 1
-        results = g.analyzeNow().collect()
-      }
+      GraftBus.waitUntilEmpty(spark.sparkContext)
+      val results = g.analyzeNow().collect()
       assert(results.nonEmpty, "no batches analyzed")
       // repeated analyses re-buffer the same batches: the ring must cap AND
       // hold at most one row per (queryId, batchId) so the discounted report
@@ -196,23 +191,29 @@ class StreamingGraftSpec extends SparkSpec {
     val g = new StreamingGraft(spark, Map(
       "streamingLens.shouldLogResults" -> "false",
       "streamingLens.expectedMicroBatchSLAMillis" -> "600000"))
-    val collected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val collected = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val ticker = _root_.graft.streaming.StreamingOps.analysisTicker(spark, 1) { () =>
       g.analyzeGuarded().collect().foreach(r =>
-        collected.add(s"${r.batchId}:${r.streamingQueryState}"))
+        collected.add((r.queryId, s"${r.batchId}:${r.streamingQueryState}")))
     }
+    // The ticker is a streaming query too, so its own (empty, NONEWBATCHES)
+    // batches are analyzed beside the live query's; every other row, ERROR
+    // rows included, counts.
+    def observed = collected.asScala.toSeq.filterNot(_._1 == ticker.id.toString).map(_._2)
     try {
       val mem = MemoryStream[Int]
+      // data before start: the first trigger runs a batch rather than
+      // posting an idle (zero-row) progress for batch 0
+      mem.addData(1 to 2000: _*)
       val q = mem.toDS().map(_ * 2).writeStream.format("memory")
         .queryName("full_loop").outputMode("append").start()
       try {
-        mem.addData(1 to 2000: _*)
         q.processAllAvailable()
         var waited = 0
-        while (collected.isEmpty && waited < 30000) { Thread.sleep(500); waited += 500 }
+        while (observed.isEmpty && waited < 30000) { Thread.sleep(500); waited += 500 }
       } finally q.stop()
-      assert(!collected.isEmpty, "ticker never produced an analysis result")
-      assert(collected.iterator().next().endsWith("OVERPROVISIONED"))
+      assert(observed.nonEmpty, "ticker never produced an analysis result")
+      assert(observed.head.endsWith("OVERPROVISIONED"))
     } finally {
       ticker.stop()
       g.stop()
