@@ -30,6 +30,10 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
 
   val config: GraftConfig = GraftConfig(options)
 
+  // Encoders for the public edges, where result rows become a Dataset over
+  // a local relation; nothing is planned or run until the caller acts on it.
+  import spark.implicits._
+
   private val schedulerBridge = new ListenerBridge.SchedulerBridge()
   private val progressBridge = new ListenerBridge.ProgressBridge()
   private val slaOverrides = new ConcurrentHashMap[String, Long]()
@@ -67,8 +71,9 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     * ([[graft.analyzer.LiveAnalyzer]], the same results as the Dataset
     * pipeline) and launches no Spark job. Retention is applied after each
     * analysis (ref `QueryInsightsManager.scala:234-244`). */
-  def analyzeNow(): Dataset[CriticalPathResult] = {
-    import spark.implicits._
+  def analyzeNow(): Dataset[CriticalPathResult] = spark.createDataset(analyzeRows())
+
+  private def analyzeRows(): Seq[CriticalPathResult] = {
     val t0 = System.nanoTime()
     // Progress first: a batch's jobs end before its progress is posted, and
     // copying the scheduler buffer second never pairs a visible progress
@@ -86,9 +91,8 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
       (System.nanoTime() - t0) / 1000000L)
     if (config.shouldLogResults) collected.foreach(r => println(Reporting.logBlock(r)))
     reporter.foreach { rep =>
-      Reporting.renderJson(spark.createDataset(collected), "graft", "run",
-        org.apache.spark.sql.functions.lit(System.currentTimeMillis()))
-        .collect().foreach(row => rep.sendEvent(row.getString(0)))
+      val now = System.currentTimeMillis()
+      collected.foreach(r => rep.sendEvent(Reporting.resultEvent(r, "graft", "run", now)))
     }
     progressBridge.evictBeyond(config.maxBatchesRetention)
     // Scheduler telemetry retention: keep a window wide enough for
@@ -96,7 +100,7 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     // to its cap and silently drops every new event.
     schedulerBridge.evictBefore(System.currentTimeMillis() -
       config.maxBatchesRetention.toLong * config.analysisIntervalMinutes * 60000L)
-    spark.createDataset(collected)
+    collected
   }
 
   /** Bounded history of analysis results, newest-last — the reference caps
@@ -131,15 +135,15 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     * `analyzer/StreamingQueryAnalyzer.scala:132-136` batch throttle):
     * returns None when called again within `analysisIntervalMinutes`;
     * otherwise analyzes, but only batches at least `analysisMinBatches`
-    * past each query's last analyzed batch id. The check-and-set is
+    * past each query's last analyzed batch id. An ERROR row always passes
+    * and never moves the batch throttle. The check-and-set is
     * synchronized so overlapping ticks cannot both pass the gate. */
   def analyzeIfDue(nowMs: Long = System.currentTimeMillis()): Option[Dataset[CriticalPathResult]] = analysisThrottleLock.synchronized {
     if (nowMs - lastAnalysisAtMs < config.analysisIntervalMinutes * 60000L) None
     else {
       lastAnalysisAtMs = nowMs
-      val results = analyzeGuarded()
-      import spark.implicits._
-      val fresh = results.collect().filter { r =>
+      val (errors, results) = guardedRows().partition(_.streamingQueryState == "ERROR")
+      val fresh = results.filter { r =>
         val last = lastAnalyzedBatch.getOrDefault(r.queryId, Long.MinValue)
         last == Long.MinValue || r.batchId - last >= config.analysisMinBatches
       }
@@ -147,7 +151,7 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
         lastAnalyzedBatch.merge(r.queryId, r.batchId,
           (a, b) => math.max(a, b))
       }
-      Some(spark.createDataset(fresh.toIndexedSeq))
+      Some(spark.createDataset(errors ++ fresh))
     }
   }
 
@@ -171,37 +175,31 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     }
 
   /** One aggregate report over the retained results: discounted score →
-    * aggregate state → recommendation specialized by the sources captured
-    * from query progress. Batches already covered by a previous report are
-    * excluded per query (ref `StreamingLensReportingHelper.scala:181-182`);
-    * batches are marked reported only AFTER every reporter send succeeds,
-    * so a transient sink failure means at-least-once redelivery on the next
-    * cadence, never silent loss. */
+    * aggregate state → recommendation specialized by each query's newest
+    * sources in the retained progress telemetry. Batches already covered
+    * by a previous report are excluded per query
+    * (ref `StreamingLensReportingHelper.scala:181-182`); batches are marked
+    * reported only AFTER every reporter send succeeds, so a transient sink
+    * failure means at-least-once redelivery on the next cadence, never
+    * silent loss. */
   def reportNow(): Dataset[AggregateStateResult] = reportLock.synchronized {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     val fresh = recentResults.filter { r =>
       r.batchId > lastReportedBatch.getOrDefault(r.queryId, -1L)
     }
-    // newest sources description per query, from the progress telemetry
-    val sources = progressBridge.snapshot(spark)
-      .filter(col("kind") === "progress" && col("batchId").isNotNull)
-      .groupBy(col("queryId"))
-      .agg(max_by(concat_ws(", ", col("sources")), col("batchId")).as("sourcesDesc"))
-    val agg = Reporting.aggregate(
-      spark.createDataset(fresh.toIndexedSeq), sources, config.discountFactor)
-    val collected = agg.collect()
+    val sources = progressBridge.retained
+      .filter(e => e.kind == "progress" && e.batchId.isDefined)
+      .groupBy(_.queryId)
+      .map { case (q, es) => q -> es.maxBy(_.batchId.get).sources.mkString(", ") }
+    val aggs = Reporting.aggregate(fresh, sources, config.discountFactor)
     if (config.shouldLogResults)
-      collected.foreach(a => println(Reporting.aggregateLogBlock(a)))
+      aggs.foreach(a => println(Reporting.aggregateLogBlock(a)))
     reporter.foreach { rep =>
-      Reporting.renderAggregateJson(
-        spark.createDataset(collected.toIndexedSeq), "graft", "aggregate",
-        lit(System.currentTimeMillis()))
-        .collect().foreach(row => rep.sendEvent(row.getString(0)))
+      val now = System.currentTimeMillis()
+      aggs.foreach(a => rep.sendEvent(Reporting.aggregateEvent(a, "graft", "aggregate", now)))
     }
     fresh.foreach(r =>
       lastReportedBatch.merge(r.queryId, r.batchId, (a, b) => math.max(a, b)))
-    spark.createDataset(collected.toIndexedSeq)
+    spark.createDataset(aggs)
   }
 
   /** [[analyzeNow]] under the reference's robustness contract
@@ -209,72 +207,64 @@ class StreamingGraft(spark: SparkSession, options: Map[String, String]) {
     * `QueryInsightsManager.scala:149-178`): the analysis runs under a
     * `maxAnalysisTimeSeconds` timeout; a timeout or failure yields a single
     * ERROR-state result instead of throwing, and `maxRetries` consecutive
-    * failures detach the tool from the session (self-shutdown). */
+    * failures detach the tool from the session (self-shutdown). The
+    * analysis runs on the driver and launches no Spark job, so there is no
+    * job group to cancel: like the reference, a timed-out analysis is
+    * abandoned, and the busy flag skips ticks until it unwinds. */
+  def analyzeGuarded(): Dataset[CriticalPathResult] = spark.createDataset(guardedRows())
+
   private val analysisBusy = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Testing seam for [[analyzeGuarded]]: the analysis it guards. Specs
-    * override this with a deliberately slow plan to exercise the
-    * timeout/cancellation path without fabricating slow telemetry. */
-  protected def runGuardedAnalysis(): Dataset[CriticalPathResult] = analyzeNow()
+    * override this with a deliberately slow or failing analysis to
+    * exercise the timeout and failure paths without fabricating telemetry. */
+  protected def runGuardedAnalysis(): Seq[CriticalPathResult] = analyzeRows()
 
-  def analyzeGuarded(): Dataset[CriticalPathResult] = {
-    import spark.implicits._
+  private def guardedRows(): Seq[CriticalPathResult] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // The busy flag prevents repeated ticks from stacking analyses; a
-    // timed-out analysis is actively CANCELLED (below), and clears the
-    // flag when its cancellation unwinds.
+    // The busy flag prevents repeated ticks from stacking analyses.
     if (!analysisBusy.compareAndSet(false, true)) {
       System.err.println("[graft] analysis still running; skipping this tick")
-      return spark.createDataset(Seq.empty[CriticalPathResult])
+      return Seq.empty
     }
-    // The analysis thread launches its Spark jobs inside a per-invocation
-    // job group so a timeout can cancelJobGroup — the abandoned plan frees
-    // its executors instead of running to completion holding cluster
-    // resources (the reference cannot cancel; we can —
-    // ref `QueryInsightsManager.scala:149-178` only abandons).
-    val jobGroup = s"graft-analysis-${java.util.UUID.randomUUID()}"
     try {
       val out = Await.result(
         Future {
-          try {
-            spark.sparkContext.setJobGroup(jobGroup,
-              "graft guarded analysis", interruptOnCancel = true)
-            try runGuardedAnalysis()
-            finally spark.sparkContext.clearJobGroup()
-          } finally analysisBusy.set(false)
+          try runGuardedAnalysis()
+          finally analysisBusy.set(false)
         },
         config.maxAnalysisTimeSeconds.seconds)
       consecutiveFailures.set(0)
       out
     } catch {
       case e: Throwable =>
-        // cancelJobGroupAndFutureJobs, not cancelJobGroup: a plain cancel
-        // only kills jobs ACTIVE at that instant, so an analysis still in
-        // driver-side planning (or between two jobs) at the timeout would
-        // survive it — the future-jobs variant also kills anything the
-        // abandoned thread submits under the group afterwards.
-        if (e.isInstanceOf[java.util.concurrent.TimeoutException])
-          spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
         System.err.println(s"[graft] analysis failed: $e")
         e.printStackTrace()
         if (consecutiveFailures.incrementAndGet() >= config.maxRetries) stop()
-        spark.createDataset(Seq(CriticalPathResult(
+        Seq(CriticalPathResult(
           "analysis", -1L, config.expectedMicroBatchSLAMillis, 0L, 0L,
-          "ERROR", -1)))
+          "ERROR", -1))
     }
   }
 
-  /** Detach listeners and close the reporter (ref `StreamingLens.scala:103-113`). */
+  private var released = false
+
+  /** Detach listeners and close the reporter (ref `StreamingLens.scala:103-113`);
+    * the reporter and the metrics source are released once, however often
+    * this runs (a self-shutdown, then the caller's own stop or `reset`). */
   def stop(): Unit = synchronized {
     if (registered) {
       spark.sparkContext.removeSparkListener(schedulerBridge)
       spark.streams.removeListener(progressBridge)
       registered = false
     }
-    org.apache.spark.graft.GraftMetricsSource.unregister(metrics)
-    reporter.foreach(_.close())
+    if (!released) {
+      released = true
+      org.apache.spark.graft.GraftMetricsSource.unregister(metrics)
+      reporter.foreach(_.close())
+    }
   }
 }
 

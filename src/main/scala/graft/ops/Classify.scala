@@ -42,10 +42,10 @@ object Classify {
   /** 5-band aggregate-state classifier over a discounted score
     * (`helper/StreamingLensReportingHelper.scala:103-141`), made total: the
     * reference's `(0,1)` gap maps to OVERPROVISIONED here (closest band). */
-  def aggregateState(score: Column): Column =
-    when(score === 0.0, "NONEWBATCHES")
-      .when(score <= 1.5, "OVERPROVISIONED")
-      .when(score <= 2.5, "OPTIMUM")
-      .when(score <= 3.5, "UNDERPROVISIONED")
-      .otherwise("UNHEALTHY")
+  def aggregateState(score: Double): String =
+    if (score == 0.0) "NONEWBATCHES"
+    else if (score <= 1.5) "OVERPROVISIONED"
+    else if (score <= 2.5) "OPTIMUM"
+    else if (score <= 3.5) "UNDERPROVISIONED"
+    else "UNHEALTHY"
 }

@@ -1,14 +1,22 @@
 package graft.report
 
+import java.io.StringWriter
+import java.util.Locale
+
+import scala.math.BigDecimal.RoundingMode
+
+import com.fasterxml.jackson.core.JsonFactory
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, udf}
+
 import graft.model.{AggregateStateResult, CriticalPathResult}
 import graft.ops.Classify
 
 /** Rolling health reporting — the reference's hourly discounted aggregation
   * + recommendation text + JSON event rendering
-  * (ref `helper/StreamingLensReportingHelper.scala:80-207`).
+  * (ref `helper/StreamingLensReportingHelper.scala:80-207`). Like the
+  * reference, it runs on the driver over the few result rows the facade
+  * already holds: plain Scala, no Spark plan.
   */
 object Reporting {
 
@@ -16,111 +24,105 @@ object Reporting {
     * states: newest batch weight 1, then `discount`, `discount²`, …
     * (ref `StreamingLensReportingHelper.scala:180-197`). NONEWBATCHES
     * (ordinal 0) batches and batches already reported are excluded
-    * (ref `:181-182`). */
-  def discountedScore(results: Dataset[CriticalPathResult],
+    * (ref `:181-182`). Returns queryId → (score, batches scored). */
+  def discountedScore(results: Seq[CriticalPathResult],
                       discount: Double = 0.95,
-                      lastReportedBatch: Long = -1L): DataFrame = {
-    val w = Window.partitionBy(col("queryId")).orderBy(col("batchId").desc)
-    results.toDF()
-      .filter(col("stateOrdinal") =!= 0 && col("batchId") > lastReportedBatch)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("wt", pow(lit(discount), col("rn") - 1))
-      .groupBy(col("queryId"))
-      .agg((sum(col("stateOrdinal") * col("wt")) / sum(col("wt"))).as("score"),
-        count(lit(1)).as("n_batches"))
-  }
+                      lastReportedBatch: Long = -1L): Map[String, (Double, Int)] =
+    results.filter(r => r.stateOrdinal != 0 && r.batchId > lastReportedBatch)
+      .groupBy(_.queryId).map { case (q, rs) =>
+        val weights = rs.indices.map(math.pow(discount, _))
+        val ordinals = rs.sortBy(-_.batchId).map(_.stateOrdinal)
+        q -> (ordinals.zip(weights).map { case (o, w) => o * w }.sum / weights.sum, rs.size)
+      }
 
   /** Recommendation text per aggregate state, specialized by source kind
     * like the reference's Kafka/File/Kinesis dispatch
     * (ref `StreamingLensReportingHelper.scala:103-175`); texts are our own. */
-  def recommendation(state: Column, sourcesDesc: Column): Column = {
+  def recommendation(state: String, sourcesDesc: String): String = {
+    val src = sourcesDesc.toLowerCase(Locale.ROOT)
     val sourceHint =
-      when(sourcesDesc.isNotNull && lower(sourcesDesc).contains("kafka"),
-        " For Kafka sources, lower the per-trigger offset cap to shrink batches.")
-        .when(sourcesDesc.isNotNull && lower(sourcesDesc).contains("file"),
-          " For file sources, lower the per-trigger file cap to shrink batches.")
-        .when(sourcesDesc.isNotNull && lower(sourcesDesc).contains("kinesis"),
-          " For Kinesis sources, lower the per-shard fetch rate to shrink batches.")
-        .otherwise("")
-    when(state === "NONEWBATCHES",
-      "No data has arrived recently; verify the source is producing.")
-      .when(state === "OVERPROVISIONED",
-        "Batches finish well under the SLA; consider fewer/smaller executors or a longer trigger interval to cut cost.")
-      .when(state === "OPTIMUM", "Pipeline is healthy; no action needed.")
-      .when(state === "UNDERPROVISIONED",
-        concat(lit("Batches exceed the healthy SLA fraction but the critical path fits; add executors to increase parallelism."),
-          sourceHint))
-      .otherwise(
-        concat(lit("Even infinite parallelism cannot meet the SLA; reduce per-record work, raise the SLA, or shrink batches."),
-          sourceHint))
+      if (src.contains("kafka")) " For Kafka sources, lower the per-trigger offset cap to shrink batches."
+      else if (src.contains("file")) " For file sources, lower the per-trigger file cap to shrink batches."
+      else if (src.contains("kinesis")) " For Kinesis sources, lower the per-shard fetch rate to shrink batches."
+      else ""
+    state match {
+      case "NONEWBATCHES" => "No data has arrived recently; verify the source is producing."
+      case "OVERPROVISIONED" =>
+        "Batches finish well under the SLA; consider fewer/smaller executors or a longer trigger interval to cut cost."
+      case "OPTIMUM" => "Pipeline is healthy; no action needed."
+      case "UNDERPROVISIONED" =>
+        "Batches exceed the healthy SLA fraction but the critical path fits; add executors to increase parallelism." +
+          sourceHint
+      case _ =>
+        "Even infinite parallelism cannot meet the SLA; reduce per-record work, raise the SLA, or shrink batches." +
+          sourceHint
+    }
   }
 
-  /** Aggregate state + recommendation per query
-    * (ref `StreamingLensReportingHelper.scala:103-141`). */
-  def aggregate(results: Dataset[CriticalPathResult],
-                sourcesByQuery: DataFrame, // (queryId, sourcesDesc)
-                discount: Double = 0.95,
-                lastReportedBatch: Long = -1L): Dataset[AggregateStateResult] = {
-    import results.sparkSession.implicits._
-    val scored = discountedScore(results, discount, lastReportedBatch)
-    scored
-      .join(broadcast(sourcesByQuery), Seq("queryId"), "left")
-      .withColumn("state", Classify.aggregateState(col("score")))
-      .select(col("queryId"), col("score"),
-        col("state"),
-        recommendation(col("state"), col("sourcesDesc")).as("recommendation"))
-      .as[AggregateStateResult]
-  }
+  /** Aggregate state + recommendation per query, ordered by queryId
+    * (ref `StreamingLensReportingHelper.scala:103-141`); `sourcesByQuery`
+    * maps a queryId to its sources description. */
+  def aggregate(results: Seq[CriticalPathResult],
+                sourcesByQuery: Map[String, String],
+                discount: Double = 0.95): Seq[AggregateStateResult] =
+    discountedScore(results, discount).toSeq.sortBy(_._1).map { case (q, (score, _)) =>
+      val state = Classify.aggregateState(score)
+      AggregateStateResult(q, score, state,
+        recommendation(state, sourcesByQuery.getOrElse(q, "")))
+    }
 
   /** Pretty duration, the reference's `pd()`:
     * millis → "NNs NNNms" (ref `QueryInsightsManager.scala:228-232`).
-    * `%02d`-style padding — pads short values but never truncates long
-    * ones (`lpad` would cut "120" to "12"). */
-  private def padMin(c: Column, width: Int): Column = {
-    val s = c.cast("string")
-    when(length(s) >= width, s).otherwise(lpad(s, width, "0"))
+    * `%02d` pads short values but never truncates long ones. */
+  def pd(ms: Long): String = "%02ds %03dms".formatLocal(Locale.ROOT, ms / 1000, ms % 1000)
+
+  private val jsonFactory = new JsonFactory()
+
+  /** The event envelope (ref `StreamingLensReportingHelper.scala:80-92`),
+    * written like Spark's `to_json`: compact, null fields omitted. */
+  private def event(eventId: String, name: String, runId: String,
+                    eventTimeMillis: Long, state: String, displayText: String): String = {
+    val out = new StringWriter()
+    val g = jsonFactory.createGenerator(out)
+    def str(k: String, v: String): Unit = if (v != null) g.writeStringField(k, v)
+    g.writeStartObject()
+    str("eventId", eventId)
+    str("name", name)
+    str("runId", runId)
+    g.writeNumberField("eventTimeMillis", eventTimeMillis)
+    str("state", state)
+    str("displayText", displayText)
+    g.writeEndObject()
+    g.close()
+    out.toString
   }
 
-  def pd(ms: Column): Column =
-    concat(
-      padMin((ms / 1000).cast("long"), 2), lit("s "),
-      padMin(ms % 1000, 3), lit("ms"))
+  /** JSON event for one analysis result. */
+  def resultEvent(r: CriticalPathResult, queryName: String, runId: String,
+                  eventTimeMillis: Long): String =
+    event(s"${r.queryId}-${r.batchId}", queryName, runId, eventTimeMillis,
+      r.streamingQueryState,
+      s"Batch ${r.batchId}: running ${pd(r.batchRunningTime)}, " +
+        s"critical ${pd(r.criticalTime)}, SLA ${pd(r.expectedMicroBatchSLA)}")
 
-  /** JSON event rendering of a result row
-    * (ref `StreamingLensReportingHelper.scala:80-92`). */
+  /** JSON event for one aggregate report row; the score is rounded HALF_UP
+    * to 2 places, as Spark's `round` does. */
+  def aggregateEvent(a: AggregateStateResult, queryName: String, runId: String,
+                     eventTimeMillis: Long): String = {
+    val score = BigDecimal(a.score).setScale(2, RoundingMode.HALF_UP).toDouble
+    event(s"${a.queryId}-aggregate", queryName, runId, eventTimeMillis, a.state,
+      s"Aggregate state ${a.state} (score $score): ${a.recommendation}")
+  }
+
+  /** [[resultEvent]] over a Dataset of results, one `event` column. */
   def renderJson(results: Dataset[CriticalPathResult], queryName: String,
-                 runId: String, analysisTimeMs: Column): DataFrame =
-    results.toDF().select(
-      to_json(struct(
-        concat(col("queryId"), lit("-"), col("batchId")).as("eventId"),
-        lit(queryName).as("name"),
-        lit(runId).as("runId"),
-        analysisTimeMs.as("eventTimeMillis"),
-        col("streamingQueryState").as("state"),
-        concat(
-          lit("Batch "), col("batchId"),
-          lit(": running "), pd(col("batchRunningTime")),
-          lit(", critical "), pd(col("criticalTime")),
-          lit(", SLA "), pd(col("expectedMicroBatchSLA"))).as("displayText")
-      )).as("event"))
-
-  /** JSON event rendering of one aggregate report row
-    * (same envelope as [[renderJson]], ref
-    * `StreamingLensReportingHelper.scala:80-92`). */
-  def renderAggregateJson(agg: Dataset[AggregateStateResult], queryName: String,
-                          runId: String, eventTimeMillis: Column): DataFrame =
-    agg.toDF().select(
-      to_json(struct(
-        concat(col("queryId"), lit("-aggregate")).as("eventId"),
-        lit(queryName).as("name"),
-        lit(runId).as("runId"),
-        eventTimeMillis.as("eventTimeMillis"),
-        col("state"),
-        concat(
-          lit("Aggregate state "), col("state"),
-          lit(" (score "), round(col("score"), 2),
-          lit("): "), col("recommendation")).as("displayText")
-      )).as("event"))
+                 runId: String, analysisTimeMs: Column): DataFrame = {
+    val render = udf((q: String, b: Long, sla: Long, brt: Long, ct: Long, state: String, t: Long) =>
+      resultEvent(CriticalPathResult(q, b, sla, brt, ct, state, 0), queryName, runId, t))
+    results.toDF().select(render(col("queryId"), col("batchId"), col("expectedMicroBatchSLA"),
+      col("batchRunningTime"), col("criticalTime"), col("streamingQueryState"),
+      analysisTimeMs).as("event"))
+  }
 
   /** Driver-log pretty block for one aggregate report
     * (ref `StreamingLensReportingHelper.scala:199-207`); texts our own. */
@@ -130,14 +132,11 @@ object Reporting {
         |  Recommendation:   ${a.recommendation}""".stripMargin
 
   /** Driver-log pretty block for one analysis
-    * (ref `QueryInsightsManager.scala:206-232`); formatted server-side with
-    * format_string, collected only for logging at the API edge. */
-  def logBlock(r: CriticalPathResult): String = {
-    def fmt(v: Long) = "%02ds %03dms".format(v / 1000, v % 1000)
+    * (ref `QueryInsightsManager.scala:206-232`). */
+  def logBlock(r: CriticalPathResult): String =
     s"""|StreamingLens report - query ${r.queryId} batch ${r.batchId}
-        |  Expected Micro Batch SLA: ${fmt(r.expectedMicroBatchSLA)}
-        |  Batch Running Time:       ${fmt(r.batchRunningTime)}
-        |  Critical Time:            ${fmt(r.criticalTime)}
+        |  Expected Micro Batch SLA: ${pd(r.expectedMicroBatchSLA)}
+        |  Batch Running Time:       ${pd(r.batchRunningTime)}
+        |  Critical Time:            ${pd(r.criticalTime)}
         |  Streaming Query State:    ${r.streamingQueryState}""".stripMargin
-  }
 }

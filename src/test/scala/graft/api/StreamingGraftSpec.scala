@@ -1,11 +1,18 @@
 package graft.api
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.config.GraftConfig
+import graft.model.CriticalPathResult
 import org.apache.spark.graft.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Reflection-loaded by the reporter SPI in the aggregate-report test. */
 object CapturingReporter {
@@ -14,6 +21,16 @@ object CapturingReporter {
 class CapturingReporter extends graft.report.EventsReporter {
   override def init(options: Map[String, String], queryId: String): Unit = ()
   override def sendEvent(json: String): Unit = CapturingReporter.events.add(json)
+}
+
+/** Counts how often the facade closes its reporter. */
+object CountingReporter {
+  val closes = new AtomicInteger()
+}
+class CountingReporter extends graft.report.EventsReporter {
+  override def init(options: Map[String, String], queryId: String): Unit = ()
+  override def sendEvent(json: String): Unit = ()
+  override def close(): Unit = CountingReporter.closes.incrementAndGet()
 }
 
 /** End-to-end: a real Structured Streaming query on a real SparkSession with
@@ -141,23 +158,15 @@ class StreamingGraftSpec extends SparkSpec {
     } finally g.stop()
   }
 
-  test("a timed-out analysis returns the ERROR row AND its Spark jobs are cancelled") {
-    import org.apache.spark.sql.Dataset
-    import graft.model.CriticalPathResult
-    // a plan whose job runs ~100 s if left alone: 8 tasks x 15 s sleep —
-    // if cancellation works, the executors free within a few seconds of
-    // the 1 s timeout instead of holding 8 cores for the full duration
-    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+  test("a timed-out analysis returns the single ERROR row") {
+    val release = new CountDownLatch(1)
     val g = new StreamingGraft(spark, Map(
       "streamingLens.maxAnalysisTimeSeconds" -> "1",
       "streamingLens.shouldLogResults" -> "false")) {
-      override protected def runGuardedAnalysis(): Dataset[CriticalPathResult] = {
-        import spark.implicits._
-        spark.range(0, 8, 1, 8).mapPartitions { it =>
-          Thread.sleep(15000); it
-        }.count()
-        slowDone.set(true)
-        spark.createDataset(Seq.empty[CriticalPathResult])
+      // a driver-side analysis that takes 100 s if left alone
+      override protected def runGuardedAnalysis(): Seq[CriticalPathResult] = {
+        release.await(100, TimeUnit.SECONDS)
+        Seq.empty
       }
     }
     try {
@@ -168,19 +177,95 @@ class StreamingGraftSpec extends SparkSpec {
         s"expected the single ERROR row, got ${out.toSeq}")
       // generous bound: the guard returns ~1s after its timeout, but a
       // loaded machine can delay the Await wake-up — what matters is that
-      // it returns in a small fraction of the 100s the plan would run
+      // it returns in a small fraction of the 100s the analysis would run
       assert(guardedSecs < 30, s"guard blocked ${guardedSecs}s past its 1s timeout")
-      // the abandoned job must actually die: poll the status tracker until
-      // no active jobs remain — well before the 15 s a surviving task
-      // would need (interruptOnCancel breaks the sleep immediately)
-      val tracker = spark.sparkContext.statusTracker
-      var waitedMs = 0
-      while (tracker.getActiveJobIds().nonEmpty && waitedMs < 12000) {
-        Thread.sleep(200); waitedMs += 200
+    } finally {
+      release.countDown()
+      g.stop()
+    }
+  }
+
+  /** A facade whose guarded analysis always throws. */
+  private def failingGraft(options: Map[String, String]): StreamingGraft =
+    new StreamingGraft(spark, options + ("streamingLens.shouldLogResults" -> "false")) {
+      override protected def runGuardedAnalysis(): Seq[CriticalPathResult] =
+        throw new IllegalStateException("deliberate analysis failure")
+    }
+
+  test("analyzeIfDue returns the ERROR row on every failing due tick") {
+    val g = failingGraft(Map(
+      "streamingLens.maxRetries" -> "10",
+      "streamingLens.analysisIntervalMinutes" -> "5"))
+    try {
+      val t0 = 10L * 60000L
+      Seq(t0, t0 + 5 * 60000L).foreach { t =>
+        val out = g.analyzeIfDue(t).map(_.collect().toSeq)
+        assert(out.map(_.map(_.streamingQueryState)) === Some(Seq("ERROR")), s"tick at $t")
       }
-      assert(tracker.getActiveJobIds().isEmpty,
-        s"analysis jobs still running ${waitedMs}ms after cancellation")
-      assert(!slowDone.get, "slow analysis ran to completion despite cancellation")
+    } finally g.stop()
+  }
+
+  test("stop after a self-shutdown closes the reporter once") {
+    CountingReporter.closes.set(0)
+    val g = failingGraft(Map(
+      "streamingLens.maxRetries" -> "1",
+      "streamingLens.reporter.className" -> classOf[CountingReporter].getName))
+    assert(g.analyzeGuarded().collect().map(_.streamingQueryState).toSeq === Seq("ERROR"))
+    assert(CountingReporter.closes.get === 1, "maxRetries 1: the failure shuts the facade down")
+    g.stop()
+    assert(CountingReporter.closes.get === 1)
+  }
+
+  test("the facade plans no Spark SQL and launches no job") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    CapturingReporter.events.clear()
+    val g = new StreamingGraft(spark, Map(
+      "streamingLens.shouldLogResults" -> "false",
+      "streamingLens.expectedMicroBatchSLAMillis" -> "600000",
+      "streamingLens.reporter.className" -> classOf[CapturingReporter].getName))
+    val executions = new AtomicInteger()
+    val jobs = new AtomicInteger()
+    val sqlListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      val mem = MemoryStream[Int]
+      val query = mem.toDS().map(_ + 1)
+        .writeStream.format("memory").queryName("graft_no_sql")
+        .outputMode("append").start()
+      try {
+        mem.addData(1 to 500: _*)
+        query.processAllAvailable()
+        mem.addData(501 to 1000: _*)
+        query.processAllAvailable()
+      } finally query.stop()
+      GraftBus.waitUntilEmpty(spark.sparkContext)
+      spark.listenerManager.register(sqlListener)
+      spark.sparkContext.addSparkListener(jobListener)
+      try {
+        g.analyzeNow()
+        g.analyzeIfDue()
+        g.analyzeGuarded()
+        g.reportNow()
+        g.reportIfDue()
+        GraftBus.waitUntilEmpty(spark.sparkContext)
+      } finally {
+        spark.listenerManager.unregister(sqlListener)
+        spark.sparkContext.removeSparkListener(jobListener)
+      }
+      assert(executions.get === 0, "Spark SQL executions inside the facade")
+      assert(jobs.get === 0, "Spark jobs inside the facade")
+      // the calls above did the work: result and aggregate events were sent
+      val sent = CapturingReporter.events.asScala.toSeq
+      assert(sent.exists(_.contains("\"displayText\":\"Batch ")), s"no result event in $sent")
+      assert(sent.exists(_.contains("-aggregate")), s"no aggregate event in $sent")
     } finally g.stop()
   }
 

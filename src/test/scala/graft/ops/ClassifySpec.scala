@@ -35,11 +35,8 @@ class ClassifySpec extends SparkSpec {
   }
 
   test("aggregate state bands incl. edges 1.5/2.5/3.5 and the (0,1) gap") {
-    import spark.implicits._
     val got = Seq(0.0, 0.5, 1.0, 1.5, 1.6, 2.5, 2.6, 3.5, 3.6, 4.0)
-      .toDF("score")
-      .select(Classify.aggregateState(col("score")).as("s"))
-      .collect().map(_.getString(0)).toSeq
+      .map(Classify.aggregateState)
     assert(got === Seq(
       "NONEWBATCHES",
       "OVERPROVISIONED", // (0,1) gap mapped to the closest band (total fn)
